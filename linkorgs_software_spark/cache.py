@@ -40,8 +40,15 @@ def register_cache(df: DataFrame) -> DataFrame:
 
 
 def _release(frames) -> int:
+    """Unpersist ``frames`` newest-first.
+
+    A frame registered later is usually built on an earlier one. Spark's
+    non-cascading uncache re-plans every still-cached frame whose plan
+    contains the one being dropped, so releasing the base first re-plans
+    each dependent on the way out; dependents first means nothing is
+    left to re-plan."""
     n = 0
-    for df in frames:
+    for df in reversed(frames):
         try:
             df.unpersist(False)
             n += 1
@@ -52,7 +59,8 @@ def _release(frames) -> int:
 
 
 def release_caches() -> int:
-    """Unpersist every tracked operator-internal frame; returns the count.
+    """Unpersist every tracked operator-internal frame, newest-first;
+    returns the count.
 
     Safe anytime: results computed from a released frame stay correct
     (Spark recomputes the lineage on the next action) — only the reuse
@@ -73,8 +81,8 @@ def scoped_caches():
     a banded frame — without scoping, a long-running stream pins one frame
     per batch forever (the registry's strong references also block GC).
     Entry snapshots the registry length; exit pops and unpersists exactly
-    the entries added within the block, leaving outer registrations (and
-    their eventual ``release_caches()``) untouched.
+    the entries added within the block, newest-first, leaving outer
+    registrations (and their eventual ``release_caches()``) untouched.
     """
     with _LOCK:
         mark = len(_OPERATOR_CACHES)

@@ -163,15 +163,21 @@ def candidate_pairs(
     ``x_prep`` / ``y_prep`` carry ``name_norm`` + the hash id (see
     functions/normalize.prepare_side).
 
-    ``x_count`` / ``y_count``: an already-known upper bound on that side's
-    distinct-name count (callers that calibrate have paid for the exact
-    count; never add an action just to learn it). A gram's posting list in
-    the (per-id-distinct) index is bounded by the side's distinct-id count,
-    so ``count <= max_block_df`` proves the df-cap a no-op and its
+    ``x_count`` / ``y_count``: an already-known upper bound on the number
+    of DISTINCT values of that side's id column as fed to ``gram_index``
+    (callers that calibrate have paid for the exact count; never add an
+    action just to learn it). A gram's posting list in the (per-id-distinct)
+    index is bounded by that distinct-id count, so ``count <=
+    max_block_df`` proves the df-cap a no-op and its
     aggregate + broadcast + anti-join subtree is pruned outright — the same
     guard ``streaming.resolve`` applies to its batch side (round-7 measure:
     the cap subtrees were ~40% of candidate-generation wall on sides far
-    under the cap). ``None`` (unknown) keeps the cap unconditionally.
+    under the cap). A distinct-NAME count (what calibration returns)
+    qualifies only because ``prepare_side`` ids are content hashes of
+    ``name_norm``, one id per distinct name; ids supplied from outside can
+    outnumber the names, and then a name count under-bounds the posting
+    lists and skips a cap that should fire. ``None`` (unknown) keeps the
+    cap unconditionally.
     """
     x_tri = gram_index(x_prep, x_id, cfg)
     y_tri = gram_index(y_prep, y_id, cfg)

@@ -22,6 +22,7 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
@@ -90,7 +91,7 @@ def _exact_quantile(dists: DataFrame, q: float) -> float | None:
     # dominant cost, paid twice (round-7 profile: ~3s per calibration, x2).
     # The frame is one double column bounded at sample_cap² rows, so the
     # cache is a few MB; values are unchanged.
-    dists = dists.persist()
+    dists = dists.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     try:
         n = dists.count()
         if n == 0:
@@ -182,6 +183,8 @@ def calibrated_threshold(
     # dedup shuffle once per action).
     x_all = x_prep.select(NORM_COL).dropDuplicates().cache()
     y_all = y_prep.select(F.col(NORM_COL).alias("_ynorm")).dropDuplicates().cache()
+    nx = ny = 0  # bound before _ret, which closes over them
+
     def _ret(v: float):
         return (v, nx, ny) if return_counts else v
 

@@ -100,6 +100,11 @@ def duplicated_spans(
     aggregates per doc. Span frequencies are counted, never joined into a
     pair blow-up — a viral boilerplate span costs one big count, not a
     bucket self-join.
+
+    Precondition: ``id_col`` is unique per document. A small input is
+    spread by repartitioning on it, so heavily repeated ids would put the
+    window explode on a few tasks; documents sharing an id are also
+    counted and reported as one document.
     """
     from ..functions.text import tokens_expr
 

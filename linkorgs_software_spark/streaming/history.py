@@ -157,7 +157,16 @@ def write_history_bucketed(
     bucket_cols: tuple[str, ...],
     num_buckets: int = 64,
 ) -> None:
-    """Idempotently (over)write ``df`` as this batch's history slice."""
+    """Idempotently (over)write ``df`` as this batch's history slice.
+
+    Ordering rule for callers: make this the batch's LAST write. An
+    insert into the table makes Spark refresh the cache of every
+    persisted frame whose plan scans the table's path, and a batch's
+    frames downstream of its prior-history join all do. Any write after
+    the insert that reads such a frame recomputes its whole lineage, and
+    unpersisting a frame whose buffer the refresh just cleared re-plans
+    its dependents. ``resolve_batch`` goes further and releases its
+    caches before the insert."""
     spark = df.sparkSession
     stamped = df.withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
     if _ensure_table(spark, table, path):

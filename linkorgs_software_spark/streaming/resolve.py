@@ -44,8 +44,15 @@ Per micro-batch N:
   4. append the directory delta: every new entity's aliases, plus each
      MATCHED name whose exact normalized form was new to the directory
      (distance > 0 — an exact-form alias would have matched at 0). Both
-     slices written to ``batch_id=N`` (idempotent overwrite), grams
-     bucketed via ``write_history_bucketed``.
+     slices written to ``batch_id=N`` (idempotent overwrite). The
+     assignments and entities slices are written while the batch's
+     caches are live; the caches are then released and the grams slice
+     is rebuilt from the entities slice just written (``gram_index`` over
+     ``alias_id``/``name_norm``) and inserted LAST via
+     ``write_history_bucketed``. The order matters: the insert refreshes
+     the cache of every frame that scans the grams table, which is every
+     frame downstream of the MATCH join, so a write after it would
+     recompute the whole match path.
 
 Append-only semantics, stated honestly: within the stream the directory
 never MERGES two existing entities — a mention similar to aliases of two
@@ -109,6 +116,9 @@ def resolve_batch(
     one id that no later batch can split (the directory is append-only).
     Production setting: lenient ``max_dist``, strict ``create_max_dist``.
     """
+    if num_history_buckets is None:  # scale-adaptive default; only the
+        # table-creating first batch actually consumes the resolved value
+        num_history_buckets = recommended_history_buckets(batch_df)
     with scoped_caches():
         _resolve_batch_inner(
             batch_df,
@@ -118,9 +128,22 @@ def resolve_batch(
             cfg=cfg,
             max_dist=max_dist,
             create_max_dist=max_dist if create_max_dist is None else create_max_dist,
-            num_history_buckets=num_history_buckets,
             compact_every=compact_every,
         )
+    # the grams slice goes last, after the caches are released (module
+    # docstring, step 4): the same rows as the batch gram index restricted
+    # to the new aliases, rebuilt from the entities slice just written
+    entities = batch_df.sparkSession.read.parquet(
+        os.path.join(out_dir, "history", "entities", f"batch_id={batch_id}")
+    )
+    write_history_bucketed(
+        gram_index(entities, "alias_id", cfg).select("gram", "alias_id"),
+        history_table_name(out_dir, "grams"),
+        os.path.join(out_dir, "history", "grams"),
+        batch_id,
+        bucket_cols=("gram",),
+        num_buckets=num_history_buckets,
+    )
 
 
 def _resolve_batch_inner(
@@ -132,12 +155,8 @@ def _resolve_batch_inner(
     cfg: LinkConfig,
     max_dist: float,
     create_max_dist: float,
-    num_history_buckets: int | None,
     compact_every: int | None,
 ) -> None:
-    if num_history_buckets is None:  # scale-adaptive default; only the
-        # table-creating first batch actually consumes the resolved value
-        num_history_buckets = recommended_history_buckets(batch_df)
     grams_dir = os.path.join(out_dir, "history", "grams")
     entities_dir = os.path.join(out_dir, "history", "entities")
     assign_dir = os.path.join(out_dir, "assignments")
@@ -398,22 +417,9 @@ def _resolve_batch_inner(
             .select("_nid", NORM_COL, "entity_id")
         )
         new_aliases = new_aliases.unionByName(novel_matched)
-    new_aliases = register_cache(
-        new_aliases.withColumnRenamed("_nid", "alias_id").persist()
-    )
-    write_history_bucketed(
-        tri.join(
-            new_aliases.select(F.col("alias_id").alias("_nid")), "_nid", "left_semi"
-        ).select("gram", F.col("_nid").alias("alias_id")),
-        grams_tbl,
-        grams_dir,
-        batch_id,
-        bucket_cols=("gram",),
-        num_buckets=num_history_buckets,
-    )
-    new_aliases.select("alias_id", "entity_id", NORM_COL).write.mode(
-        "overwrite"
-    ).parquet(f"{entities_dir}/batch_id={batch_id}")
+    new_aliases.select(
+        F.col("_nid").alias("alias_id"), "entity_id", NORM_COL
+    ).write.mode("overwrite").parquet(f"{entities_dir}/batch_id={batch_id}")
 
 
 def compact_directory(

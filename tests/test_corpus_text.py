@@ -425,6 +425,35 @@ def test_release_caches_frees_operator_persists(spark, docs):
     assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == base
 
 
+def test_cache_release_is_newest_first(monkeypatch):
+    """Both release paths unpersist newest-first: a later frame is usually
+    built on an earlier one, and dropping the base first makes Spark
+    re-plan every still-cached dependent."""
+    from linkorgs_software_spark import cache
+
+    order = []
+
+    class _Frame:
+        def __init__(self, name):
+            self.name = name
+
+        def unpersist(self, blocking=False):
+            order.append(self.name)
+
+    monkeypatch.setattr(cache, "_OPERATOR_CACHES", [])
+    cache.register_cache(_Frame("outer"))
+    with cache.scoped_caches():
+        for name in ("prep", "names", "tri"):
+            cache.register_cache(_Frame(name))
+    assert order == ["tri", "names", "prep"]  # the outer frame stays
+
+    order.clear()
+    for name in ("a", "b"):
+        cache.register_cache(_Frame(name))
+    assert cache.release_caches() == 3
+    assert order == ["b", "a", "outer"]
+
+
 def test_multiprobe_lsh_reaches_brute_recall_at_low_threshold(spark):
     """Multi-probe LSH (hamming-1 neighbor buckets) is the scale path for
     cosine thresholds below the sign-LSH sweet spot: on planted twins at

@@ -1171,3 +1171,120 @@ def test_resolve_history_gram_join_shuffle_free(spark, tmp_path):
     assert plan.count("Exchange") == 1, plan
     seg_after_scan = plan[plan.index("FileScan parquet"):]
     assert "Exchange" not in seg_after_scan
+
+
+def test_stream_batches_insert_bucketed_history_last(spark, tmp_path, monkeypatch):
+    """Every streaming micro-batch makes the bucketed history insert its
+    last write: the insert refreshes the cache of each persisted frame
+    that scans the history table, so a write after it would recompute
+    the batch. The resolver also releases its caches before the insert."""
+    import numpy as np
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import linkorgs_software_spark.cache as cache
+    from linkorgs_software_spark.streaming import embed_neardup, neardup, resolve
+
+    writes = []
+    plain_parquet = DataFrameWriter.parquet
+
+    def _parquet(self, path, *a, **kw):
+        writes.append(("parquet", path))
+        return plain_parquet(self, path, *a, **kw)
+
+    def _recording(module):
+        inner = module.write_history_bucketed
+
+        def _write(*a, **kw):
+            writes.append(("bucketed", len(cache._OPERATOR_CACHES)))
+            return inner(*a, **kw)
+
+        monkeypatch.setattr(module, "write_history_bucketed", _write)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _parquet)
+    for module in (resolve, neardup, embed_neardup):
+        _recording(module)
+    registry = len(cache._OPERATOR_CACHES)
+
+    def _check(run, n_plain):
+        for batch_id in (0, 1):  # batch 1 joins the history batch 0 wrote
+            writes.clear()
+            run(batch_id)
+            assert [k for k, _ in writes] == ["parquet"] * n_plain + ["bucketed"], writes
+        return writes[-1][1]
+
+    names = [("Acme Corp",), ("Globex Inc",)], [("ACME corp x",), ("Initech LLC",)]
+    out = str(tmp_path / "order_resolve")
+    n_live = _check(
+        lambda b: resolve.resolve_batch(
+            spark.createDataFrame(names[b], "name string"), b, out
+        ),
+        2,  # assignments, entities
+    )
+    assert n_live == registry  # released before the insert
+
+    docs = [(1, _BASE), (2, _OTHER)], [(4, _EDITED), (5, _OTHER + " again")]
+    out = str(tmp_path / "order_neardup")
+    _check(
+        lambda b: neardup.neardup_batch(
+            spark.createDataFrame(docs[b], "doc_id long, text string"), b, out
+        ),
+        2,  # docs, shingles
+    )
+
+    rng = np.random.RandomState(5)
+    out = str(tmp_path / "order_embed")
+    _check(
+        lambda b: embed_neardup.embed_neardup_batch(
+            spark.createDataFrame(
+                [(10 * b + i, [float(x) for x in rng.normal(size=8)]) for i in range(3)],
+                "vec_id long, embedding array<float>",
+            ),
+            b,
+            out,
+            dim=8,
+        ),
+        2,  # docs, embeddings
+    )
+    assert len(cache._OPERATOR_CACHES) == registry
+
+
+def test_resolve_grams_slice_is_gram_index_of_entities_slice(spark, tmp_path):
+    """Each batch's gram history slice holds exactly the trigram postings of
+    the aliases that batch added to the directory, and a replayed batch
+    still resolves identically against it."""
+    from linkorgs_software_spark.config import DEFAULT
+    from linkorgs_software_spark.operators.blocking import gram_index
+    from linkorgs_software_spark.streaming import resolve_batch
+
+    out = str(tmp_path / "resolve_grams")
+    batches = [
+        [("Acme Corp",), ("Acme Corp x",), ("Globex Inc",)],
+        [("ACME corp.",), ("Globex Incorporated",), ("Initech LLC",)],
+    ]
+    for batch_id, rows in enumerate(batches):
+        resolve_batch(spark.createDataFrame(rows, "name string"), batch_id, out)
+
+    def _assignments():
+        return sorted(
+            (r.name, r.entity_id, r.matched_prior, r.stringdist)
+            for r in spark.read.parquet(f"{out}/assignments/batch_id=1").collect()
+        )
+
+    for batch_id in (0, 1):
+        ents = spark.read.parquet(f"{out}/history/entities/batch_id={batch_id}")
+        want = {
+            (r.gram, r.alias_id)
+            for r in gram_index(ents, "alias_id", DEFAULT).collect()
+        }
+        got = {
+            (r.gram, r.alias_id)
+            for r in spark.read.parquet(
+                f"{out}/history/grams/batch_id={batch_id}"
+            ).collect()
+        }
+        assert want and got == want, batch_id
+
+    first = _assignments()
+    assert any(m for _, _, m, _ in first) and not all(m for _, _, m, _ in first)
+    resolve_batch(spark.createDataFrame(batches[1], "name string"), 1, out)
+    assert _assignments() == first
